@@ -1261,8 +1261,11 @@ def q_pq_topk(spark: SparkSession, sf: str) -> DataFrame:
     combined map-side by the packed argmin agg); the ADC table is
     query-sized ({mk} rows, broadcast); top-k is TakeOrdered, never a
     global sort. Memory story: {m} bytes/vector at rest vs
-    {dim}x4 floats — the billion-scale regime PQ exists for."""
-    e = load(spark, sf, "embeddings")
+    {dim}x4 floats — the billion-scale regime PQ exists for. Elements are
+    widened to DOUBLE before the square, as in the twin: float32 products
+    round differently and flip near-tie codes."""
+    e = load(spark, sf, "embeddings").withColumn(
+        "embedding", F.col("embedding").cast("array<double>"))
     cents = (e.where(F.col("vec_id") < _PQ_K)
              .select(F.col("vec_id").alias("cb"),
                      F.col("embedding").alias("cemb")))

@@ -5,12 +5,15 @@ flags. Runs main() in-process against the shared test session."""
 from __future__ import annotations
 
 import json
+import os
 import sys
 
 import pyarrow as pa
 import pyarrow.parquet as pq
 
 from ksana_corpus_builder_spark.sources.pages import make_pages_pdf
+
+JOBS = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "jobs")
 
 
 def test_job_runs_from_config(spark, tmp_path, monkeypatch):
@@ -26,7 +29,7 @@ def test_job_runs_from_config(spark, tmp_path, monkeypatch):
         "snapshot_id": 7,
     }))
 
-    sys.path.insert(0, "/root/repo/jobs")
+    sys.path.insert(0, JOBS)
     import quality_filter_job as job
 
     monkeypatch.setattr(sys, "argv", ["job", "--config", str(cfg)])
@@ -48,7 +51,7 @@ def test_job_config_cli_override(spark, tmp_path, monkeypatch):
     cfg.write_text(json.dumps({"input": str(tmp_path / "WRONG"),
                                "output": str(tmp_path / "o1")}))
 
-    sys.path.insert(0, "/root/repo/jobs")
+    sys.path.insert(0, JOBS)
     import quality_filter_job as job
 
     out = tmp_path / "o2"
