@@ -9,7 +9,8 @@ Default: runs the headline queries at $SPARK_GRAFT_SF_DIR (default
 shaped pages table (url, warc_ts, html, text, lang; SPARK_GRAFT_SCALE_N
 pages, 64 parquet files) ONCE, then runs the identical full pipeline
 (html extraction + langid + rules + perplexity + scrub) over the same
-files at each level of SPARK_GRAFT_SCALE_CPUS (default 2,8,32) in fresh
+files at each level of SPARK_GRAFT_SCALE_CPUS (default CPUS // 4 and
+CPUS, where CPUS is $SPARK_GRAFT_CPUS or the host's core count) in fresh
 subprocesses (new JVM each — master is immutable per JVM) and reports
 docs/sec per level plus pairwise N->4N efficiencies (target >= 0.8,
 BASELINE.md). All runs read the same splits (maxPartitionBytes pinned so
@@ -27,7 +28,10 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count())
+# the N -> 4N pair that fits the host (1,4 on a 4-core box)
+SCALE_LEVELS = os.environ.get("SPARK_GRAFT_SCALE_CPUS") or (
+    f"{max(1, CPUS // 4)},{CPUS}")
 
 HEADLINE = (
     "keep_drop", "langid", "scrub", "doc_stats", "posting_stats",
@@ -137,8 +141,7 @@ def main() -> None:
             subprocess.run(
                 [sys.executable, os.path.abspath(__file__), "--stage-pages"],
                 env=dict(os.environ), check=True)
-        levels = [int(x) for x in os.environ.get(
-            "SPARK_GRAFT_SCALE_CPUS", "2,8,32").split(",")]
+        levels = [int(x) for x in SCALE_LEVELS.split(",")]
         out = {}
         for cpus in levels:
             env = dict(os.environ, SPARK_GRAFT_CPUS=str(cpus))

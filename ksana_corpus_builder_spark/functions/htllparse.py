@@ -26,7 +26,7 @@ from __future__ import annotations
 import re
 from dataclasses import dataclass, field
 
-from .preparse import _State
+from .preparse import _MAXPAGE, _State
 
 _LONG_PB = re.compile(r"\d+\.(\d+)([abcd]?)")
 _SHORT_PB = re.compile(r"(\d+)([abcd]?)")
@@ -62,6 +62,9 @@ def parse_htll(content: str, columns: int | None = None) -> HtllParsed:
         if columns:
             col = m.group(2) or "a"
             pagenumber = pagenumber * columns + (int(col, 36) - 10)
+        if not 0 <= pagenumber < _MAXPAGE:
+            out.errors.append(f"wrong pb {body}")
+            return False
         if pagenumber == 0:
             st.add_book()
         st.pb = pagenumber + 1

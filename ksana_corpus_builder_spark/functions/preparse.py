@@ -46,6 +46,9 @@ _TAG_RE = re.compile(
 _ATTR_RE = re.compile(r"([\w:.-]+)=\"([^\"]*)\"")
 
 _MAXCHAR = codec.DEFAULT_PATTERN.maxchar
+# page numbers are 1-based; page N is stored at address page N-1
+_MAXPAGE = 1 << codec.DEFAULT_PATTERN.pagebits
+_MAXLINE = 1 << codec.DEFAULT_PATTERN.linebits
 
 # newline must be its own token (the reference tokenizer emits lone "\n"
 # tokens — emittext compares token text to "\n", parsepre.js:50)
@@ -167,7 +170,13 @@ def _handle_pb(st: _State, attrs: dict[str, str]) -> None:
     if not n:
         return
     parts = re.split(r"[.p]", n)
-    page = int(parts[1] if len(parts) == 2 else parts[0])
+    try:
+        page = int(parts[1] if len(parts) == 2 else parts[0])
+    except ValueError:
+        page = 0
+    if not 0 < page <= _MAXPAGE:
+        st.out.errors.append(f"wrong page number {n}")
+        return
     if page == 1:
         st.add_book()
     elif page != st.prevpage + 1:

@@ -33,7 +33,8 @@ from __future__ import annotations
 import re
 from dataclasses import dataclass, field
 
-from .preparse import _ATTR_RE, _MAXCHAR, _PRE_TOKEN_RE, _TAG_RE
+from .preparse import (_ATTR_RE, _MAXCHAR, _MAXLINE, _MAXPAGE,
+                       _PRE_TOKEN_RE, _TAG_RE)
 from ..tokenizer import SPACE, _GROUP_TYPE
 from .. import codec
 
@@ -124,12 +125,19 @@ class _TeiState:
             return
         str_page, str_line = n.split(".", 1)
         try:
-            page = int(str_page)
+            try:
+                page = int(str_page)
+            except ValueError:
+                page = int(str_page[1:])
+            line = int(str_line)
         except ValueError:
-            page = int(str_page[1:])
-        line = int(str_line)
+            self.out.errors.append(f"wrong line number n={n}")
+            return
         if page < 1:
             self.out.errors.append(f"negative page number n={n}")
+            return
+        if page > _MAXPAGE or not 0 < line <= _MAXLINE:
+            self.out.errors.append(f"line number out of range n={n}")
             return
         self.emit_line()
         if self.pb != str_page and page == 1:

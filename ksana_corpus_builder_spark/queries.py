@@ -687,9 +687,10 @@ def stage_pages(spark: SparkSession, sf: str) -> str:
     pre-seed in __spark_entry__ — always reads the same table (ADVICE r3:
     the old per-sf n keyed nothing to the staged dir).
 
-    IDEMPOTENT: a pre-existing stage is reused only after the same
-    cardinality + content-sentinel validation __spark_entry__'s pre-seed
-    applies (ADVICE r4 #2 — drift is restaged, never trusted). Without
+    IDEMPOTENT: a pre-existing stage is reused only after a cardinality
+    check plus first-row and last-row content sentinels (the first row of
+    the lowest-numbered part file, the last row of the highest-numbered
+    one; ADVICE r4 #2 — drift is restaged, never trusted). Without
     the short-circuit, a composition query whose sub-stacks each call
     stage_pages (host_reputation joins three) would overwrite the
     staged files between captures and invalidate the earlier
@@ -705,12 +706,16 @@ def stage_pages(spark: SparkSession, sf: str) -> str:
         try:
             if parts:
                 n = sum(pq.ParquetFile(p).metadata.num_rows for p in parts)
-                p0 = (pq.read_table(min(parts), columns=["url", "text"])
-                      .to_pandas())
-                exp = make_pages_pdf(1, seed=42)
-                if (n == STAGE_N and len(p0) > 0
-                        and p0.iloc[0]["url"] == exp["url"][0]
-                        and p0.iloc[0]["text"] == exp["text"][0]):
+                cols = ["url", "text"]
+                got = pd.concat([
+                    pq.read_table(min(parts), columns=cols).to_pandas()[:1],
+                    pq.read_table(max(parts), columns=cols).to_pandas()[-1:],
+                ], ignore_index=True)
+                exp = pd.concat([
+                    make_pages_pdf(1, seed=42),
+                    make_pages_pdf(1, seed=42, start_id=STAGE_N - 1),
+                ], ignore_index=True)[cols]
+                if n == STAGE_N and got.equals(exp):
                     return _PAGES_STAGE
         except Exception:
             pass  # unreadable/partial stage -> rewrite below

@@ -232,38 +232,28 @@ def stage_jsonl() -> str:
     import json
     import os
 
-    def _row(i: int, pdf) -> dict:
-        return {
-            "url": pdf["url"][0],
-            "warc_ts": pdf["warc_ts"][0].isoformat(),
-            "html_b64": base64.b64encode(bytes(pdf["html"][0])).decode(),
-            "text": pdf["text"][0],
-            "lang": pdf["lang"][0],
-        }
+    def _line(pdf, i: int = 0) -> str:
+        return json.dumps({
+            "url": pdf["url"][i],
+            "warc_ts": pdf["warc_ts"][i].isoformat(),
+            "html_b64": base64.b64encode(bytes(pdf["html"][i])).decode(),
+            "text": pdf["text"][i],
+            "lang": pdf["lang"][i],
+        }, ensure_ascii=True, separators=(",", ":"))
 
-    def _line(i: int) -> str:
-        return json.dumps(_row(i, make_pages_pdf(1, seed=42, start_id=i)),
-                          ensure_ascii=True, separators=(",", ":"))
+    def _sentinel(i: int) -> str:
+        return _line(make_pages_pdf(1, seed=42, start_id=i))
 
     if os.path.isfile(JSONL_PATH):
         with open(JSONL_PATH, encoding="utf-8") as f:
             lines = f.read().splitlines()
-        if (len(lines) == STAGE_N and lines[0] == _line(0)
-                and lines[-1] == _line(STAGE_N - 1)):
+        if (len(lines) == STAGE_N and lines[0] == _sentinel(0)
+                and lines[-1] == _sentinel(STAGE_N - 1)):
             return JSONL_PATH
     os.makedirs(os.path.dirname(JSONL_PATH), exist_ok=True)
     pdf = make_pages_pdf(STAGE_N, seed=42)
     with open(JSONL_PATH + ".tmp", "w", encoding="utf-8") as f:
         for i in range(STAGE_N):
-            row = {
-                "url": pdf["url"][i],
-                "warc_ts": pdf["warc_ts"][i].isoformat(),
-                "html_b64": base64.b64encode(
-                    bytes(pdf["html"][i])).decode(),
-                "text": pdf["text"][i],
-                "lang": pdf["lang"][i],
-            }
-            f.write(json.dumps(row, ensure_ascii=True,
-                               separators=(",", ":")) + "\n")
+            f.write(_line(pdf, i) + "\n")
     os.replace(JSONL_PATH + ".tmp", JSONL_PATH)
     return JSONL_PATH

@@ -4,7 +4,7 @@ for the codec, tokenizer, and scrub invariants."""
 
 from __future__ import annotations
 
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from ksana_corpus_builder_spark import codec, tokenizer
@@ -82,6 +82,12 @@ def test_indexable_tokens_positions_monotone(chars_):
 @given(st.text(alphabet=st.characters(
     whitelist_categories=("Lu", "Ll", "Nd", "Po", "Zs"),
     whitelist_characters="<>/=\"\n~#%^一二三頁段註釋卷品"), max_size=200))
+@example("~0:")                       # page 0 -> address page -1
+@example('<pb n="0"/>x')
+@example('<pb n="a"/>x')              # non-numeric page
+@example('<pb n="99999999"/>x')       # beyond the page address range
+@example('<lb n="1.x"/>x')
+@example('<lb n="1.0"/>x')            # line 0 -> address line -1
 @settings(max_examples=120, deadline=None)
 def test_parsers_never_crash(content):
     """Fuzz: arbitrary junk (including half-open tags and CJK markers)

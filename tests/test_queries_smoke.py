@@ -126,3 +126,51 @@ def test_stage_pages_idempotent_reuse_and_drift_restage(spark):
                if f.endswith(".parquet"))[0],
         columns=["text"]).to_pandas()
     assert not str(back.iloc[0]["text"]).startswith("DRIFTED")
+    # drift in the last row of the highest-numbered part file only -> restage
+    parts = sorted(os.path.join(path, f) for f in os.listdir(path)
+                   if f.endswith(".parquet"))
+    last = parts[-1]
+    t = pq.read_table(last)
+    pdf = t.to_pandas()
+    pdf.loc[len(pdf) - 1, "text"] = "DRIFTED " + str(pdf.loc[len(pdf) - 1, "text"])
+    pq.write_table(pa.Table.from_pandas(pdf, schema=t.schema), last)
+    assert stage_pages(spark, SF) == STAGE_PATH
+    back = pq.read_table(
+        sorted(os.path.join(path, f) for f in os.listdir(path)
+               if f.endswith(".parquet"))[-1],
+        columns=["text"]).to_pandas()
+    assert not str(back.iloc[-1]["text"]).startswith("DRIFTED")
+
+
+def test_stage_jsonl_bytes_and_reuse(tmp_path, monkeypatch):
+    """stage_jsonl writes one compact ASCII JSON object per page (html as
+    base64) and reuses a stage whose count and first/last lines match."""
+    import base64
+    import json
+    import os
+
+    from ksana_corpus_builder_spark.sources import pages
+
+    path = str(tmp_path / "current.jsonl")
+    monkeypatch.setattr(pages, "JSONL_PATH", path)
+    assert pages.stage_jsonl() == path
+    with open(path, "rb") as f:
+        raw = f.read()
+    lines = raw.decode("ascii").split("\n")
+    assert lines[-1] == "" and len(lines) == pages.STAGE_N + 1
+    for line, i in ((lines[0], 0), (lines[-2], pages.STAGE_N - 1)):
+        pdf = pages.make_pages_pdf(1, seed=42, start_id=i)
+        row = {
+            "url": pdf["url"][0],
+            "warc_ts": pdf["warc_ts"][0].isoformat(),
+            "html_b64": base64.b64encode(bytes(pdf["html"][0])).decode(),
+            "text": pdf["text"][0],
+            "lang": pdf["lang"][0],
+        }
+        assert line == json.dumps(row, ensure_ascii=True,
+                                  separators=(",", ":"))
+    mtime = os.stat(path).st_mtime_ns
+    assert pages.stage_jsonl() == path
+    assert os.stat(path).st_mtime_ns == mtime
+    with open(path, "rb") as f:
+        assert f.read() == raw
